@@ -4,29 +4,29 @@ This is the engine's flagship stateful operator: the Structured-Streaming
 re-expression of "apply the oplog to MySQL with INSERT … ON DUPLICATE KEY
 UPDATE / DELETE" (SURVEY.md §2.9, §3-C).
 
-Design:
-- ``reconcile``: pure batch algebra — per key keep the image with the
-  greatest (ts, seq); associative, so it can fold micro-batches in any
-  grouping: reconcile(reconcile(a,b),c) == reconcile(a, b ∪ c). That
-  associativity IS the exactly-once argument under micro-batch replay.
-- Tombstones STAY in the state table (op='d' rows are retained with their
-  (ts, seq)): dropping them physically would let a late, older event
-  resurrect a deleted key. ``current_state`` filters them at read time.
-- ``CdcParquetSink``: foreachBatch writer with a batch-id guard — replaying
-  an already-committed epoch is a no-op (idempotent sink = exactly-once).
-
-Scale (100 TB): state is partitioned parquet keyed by hash(key); each
-micro-batch rewrites only the key-buckets it touches (partition-overwrite),
-never the whole table. Deletes compact away on rewrite once older than the
-watermark horizon.
+- ``reconcile``: pure batch algebra. Per key it keeps the image with the
+  greatest (ts, seq). It is associative, reconcile(reconcile(a, b), c) ==
+  reconcile(a ∪ b ∪ c), so micro-batches fold in any grouping; that is
+  the exactly-once argument under micro-batch replay.
+- Tombstones stay in the state table (op='d' rows keep their (ts, seq)):
+  dropping them would let a late, older event resurrect a deleted key.
+  ``current_state`` filters them at read time.
+- ``BucketedParquetSink``: the foreachBatch commit protocol shared by the
+  LWW sink ``CdcParquetSink`` and the SCD2 history sink
+  ``Scd2ParquetSink``. State is parquet partitioned by a hash bucket of
+  the key. A micro-batch reads only the buckets its keys touch and
+  replaces them with one dynamic partition overwrite, then records its
+  batch id in an atomically replaced commit log; replaying a committed
+  batch id is a no-op.
+- ``cdc_apply_stateful_stream``: the same LWW apply with the per-key image
+  in the Spark StateStore instead of a parquet table.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -42,17 +42,10 @@ def reconcile(envelopes: DataFrame) -> DataFrame:
     (ts, seq) — seq (the resume-token stand-in) breaks ts ties exactly the
     way the oplog's total order would.
 
-    r14 (guide §1.2 per-task work): ONE ``max(struct(ts, seq, op,
-    after))`` instead of four struct-buffer aggregates (two max_by + two
-    max-of-struct). All four were declarative aggregates with struct
-    buffers — ineligible for HashAggregate/ObjectHashAggregate, so the
-    plan is a SortAggregate either way — but each row paid four struct
-    comparisons where one suffices. Winner identity: (ts, seq) leads the
-    struct, and seq is the globally-unique oplog position, so within a
-    key the comparison never reaches op/after except for byte-identical
-    replayed rows (idempotent re-delivery), where either pick is the
-    same row. Measured 0.41 → 0.27 s noop on cdc_apply_batch at sf0.1,
-    hash-identical; per-event comparison count drops 4× at any scale."""
+    One ``max(struct(ts, seq, op, after))`` picks the winner: (ts, seq)
+    leads the struct and seq is the globally unique oplog position, so
+    within a key the comparison reaches op/after only for byte-identical
+    re-delivered rows, where either pick is the same row."""
     m = envelopes.groupBy("key").agg(
         F.max(F.struct("ts", "seq", "op", "after")).alias("_m")
     )
@@ -66,8 +59,9 @@ def reconcile(envelopes: DataFrame) -> DataFrame:
 
 
 def merge_states(state: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold a reconciled delta onto an existing state — same LWW rule, so
-    it is just reconcile(state ∪ delta). Both sides carry STATE_COLS."""
+    """Fold a delta (raw envelopes or reconciled rows) onto an existing
+    state — same LWW rule, so it is just reconcile(state ∪ delta) over
+    STATE_COLS."""
     return reconcile(state.select(*STATE_COLS).unionByName(delta.select(*STATE_COLS)))
 
 
@@ -91,7 +85,7 @@ def cdc_apply_batch(envelopes: DataFrame) -> DataFrame:
 # --- applyInPandasWithState form (SURVEY.md §2.9: "at scale
 # applyInPandasWithState for in-flight state") -------------------------------
 #
-# The foreachBatch sink above re-reads and rewrites the state TABLE per
+# The parquet sinks below re-read and rewrite the touched state buckets per
 # micro-batch — correct, but the state round-trips through the filesystem.
 # This form keeps the per-key LWW image in the Spark StateStore instead:
 # executor-local, versioned, checkpointed incrementally — the shape that
@@ -183,131 +177,6 @@ def cdc_apply_stateful_stream(env: DataFrame) -> DataFrame:
     )
 
 
-@dataclass
-class CdcParquetSink:
-    """foreachBatch sink maintaining a parquet state table with batch-id
-    idempotency (SURVEY.md §3-C step 3).
-
-    Plain parquet has no MERGE, so a commit folds the delta into state with
-    merge_states(old, delta) — but BOUNDED: the state table is partitioned
-    on ``bucket = pmod(xxhash64(key), n_buckets)`` and each micro-batch
-
-    1. reconciles the delta and computes its touched bucket set (≤
-       n_buckets values — a driver-side collect of bucket ids, never keys),
-    2. reads ONLY those state partitions back (partition pruning on the
-       bucket directory column),
-    3. writes the merged buckets with dynamic partition overwrite, so
-       parquet files in untouched buckets are never rewritten.
-
-    Per-batch I/O is therefore O(touched state) not O(total state); at
-    100 TB with n_buckets sized so a bucket fits an executor, a micro-batch
-    touching k keys rewrites at most k buckets. ``tests/test_streaming.py::
-    test_sink_rewrites_only_touched_buckets`` pins the behavior via file
-    mtimes. (The StateStore form ``cdc_apply_stateful_stream`` above remains
-    the no-filesystem-round-trip alternative.)
-    """
-
-    spark: SparkSession
-    state_dir: str
-    n_buckets: int = 16
-    _committed: set[int] = field(default_factory=set)
-
-    @property
-    def _commit_log(self) -> str:
-        return os.path.join(self.state_dir, "_commits.json")
-
-    def _load_commits(self) -> set[int]:
-        if os.path.exists(self._commit_log):
-            with open(self._commit_log) as f:
-                return set(json.load(f))
-        return set()
-
-    def _save_commits(self) -> None:
-        # the parquet write normally creates state_dir, but a committed
-        # NO-OP batch (empty feed) reaches here first — create the dir
-        # (round-10 EMPTY-fixture catch, found by the CLI-on-empty run)
-        os.makedirs(self.state_dir, exist_ok=True)
-        with open(self._commit_log, "w") as f:
-            json.dump(sorted(self._committed), f)
-
-    def _bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
-        )
-
-    def state(self) -> DataFrame | None:
-        path = os.path.join(self.state_dir, "state")
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            return None  # first batch: no state yet
-
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._committed = self._load_commits()
-        if batch_id in self._committed:
-            return  # replayed epoch — idempotent no-op
-        delta = self._bucket(reconcile(batch_df))
-        old = self.state()
-        path = os.path.join(self.state_dir, "state")
-        tmp = os.path.join(self.state_dir, f"state_tmp_{batch_id}")
-        # The state-write → commit-log sequence is not atomic; a crash
-        # between the two replays the batch, which is safe only because
-        # merge_states is last-writer-wins idempotent per key.
-        try:
-            if old is None:
-                new = delta
-            else:
-                # ≤ n_buckets small ints — the only driver-side collect.
-                touched = [
-                    r["bucket"] for r in delta.select("bucket").distinct().collect()
-                ]
-                # .filter on the partition column prunes to the touched
-                # bucket directories; unread buckets cost zero I/O.
-                new = self._bucket(
-                    merge_states(old.filter(F.col("bucket").isin(touched)), delta)
-                )
-            if new.isEmpty():
-                # an EMPTY micro-batch (zero envelopes after filters —
-                # e.g. a heartbeat-only feed) folds to no state change;
-                # writing an empty tmp dir would fail on read-back
-                # (round-10 EMPTY-fixture catch, same guard as the SCD2
-                # sink) — commit the no-op instead
-                self._committed.add(batch_id)
-                self._save_commits()
-                return
-            # Two-phase: materialize the merged buckets to tmp first (the
-            # merge READS path, so overwriting path in the same job would
-            # clobber its own input), then dynamic-partition-overwrite into
-            # the state table — only directories present in tmp (= touched
-            # buckets) are replaced; all other bucket files stay untouched.
-            new.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-            (
-                self.spark.read.parquet(tmp)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(path)
-            )
-            self._committed.add(batch_id)
-            self._save_commits()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    def current(self) -> DataFrame:
-        st = self.state()
-        if st is None:
-            # EMPTY feed (round-10 EMPTY-fixture catch): a replay that
-            # carried zero envelopes writes no state files — the correct
-            # sink table is EMPTY, not an error. Schema is static for
-            # this feed (current_state's projection of the envelope).
-            return self.spark.createDataFrame(
-                [],
-                "key long, last_ts timestamp, last_event_type string,"
-                " last_value double, last_k long",
-            )
-        return current_state(st)
-
-
 def scd2_versions(envelopes: DataFrame) -> DataFrame:
     """SCD2 version rows from one envelope bag: every non-delete envelope
     opens an interval; the key's next envelope (delete included) closes
@@ -327,45 +196,63 @@ def scd2_versions(envelopes: DataFrame) -> DataFrame:
 
 
 @dataclass
-class Scd2ParquetSink:
-    """foreachBatch sink maintaining the SCD2 HISTORY table incrementally
-    — the streaming twin of the batch ``cdc_scd2`` window (same oracle:
-    micro-batch folding must be invisible). Reuses CdcParquetSink's
-    bounded-commit protocol verbatim: hash(key) bucket partitioning,
-    touched-bucket partition pruning on read, two-phase dynamic partition
-    overwrite on write, batch-id commit log for idempotent replay.
+class BucketedParquetSink:
+    """foreachBatch sink keeping a keyed parquet state table, applied
+    exactly once per batch id. Subclasses supply ``fold``.
 
-    Per batch: (1) the delta's own envelopes become version rows via the
-    same window the batch form uses; (2) each touched key's still-open
-    row in state is CLOSED with the key's first delta timestamp (delete
-    envelopes close without opening). Correct under the replay's
-    guarantee that per-key (ts, seq) never decreases across micro-batches
-    — the oplog's total order (SURVEY §1.1).
+    Layout under ``state_dir``:
 
-    Crash-replay idempotency (round 9): the state-write → commit-log
-    sequence is not atomic, so a crash between the two replays a batch
-    whose rows are already (even PARTIALLY — the dynamic partition
-    overwrite is per-bucket-directory, not atomic across buckets) in
-    state. CdcParquetSink survives that window because LWW merge is
-    idempotent; the SCD2 fold is made idempotent explicitly, per row:
-    (a) an open row is closed only when the delta's first (ts, seq) is
-    STRICTLY GREATER than the row's own (valid_from, seq) — a replayed
-    batch's first envelope never out-orders the open row it itself
-    created, so re-closing (which would corrupt the interval with an
-    older timestamp) cannot happen; (b) delta version rows are added via
-    a (key, seq) anti-join against the touched state, so rows already
-    folded are not duplicated. Both guards are no-ops on the happy path
-    (per-key monotone (ts, seq) makes the strict comparison true and the
-    anti-join empty for genuinely new batches).
-    tests/test_streaming.py::test_scd2_sink_failure_replay_* pin both
-    interleavings deterministically."""
+    - ``state/bucket=<b>/*.parquet`` with ``b = pmod(xxhash64(key),
+      n_buckets)``;
+    - ``_commits.json``: a JSON list of the committed batch ids.
+
+    ``apply_batch(batch_df, batch_id)``:
+
+    1. A batch id already in the commit log is a replay: return.
+    2. Collect the distinct buckets of the batch keys (at most
+       ``n_buckets`` ints, the only driver-side collect). An empty list is
+       an empty batch, committed as a no-op.
+    3. Read only those bucket directories of the old state, with the state
+       schema given explicitly (the schema of ``fold``'s plan), so no
+       schema-inference job runs.
+    4. Write ``fold(batch_df, old_touched)`` once, straight into ``state/``
+       with ``partitionOverwriteMode=dynamic``: only the bucket directories
+       present in the output are replaced, and the files of every other
+       bucket keep their paths and mtimes.
+    5. Add the batch id to the commit log: ``_commits.json.tmp`` is
+       written, fsynced and ``os.replace``-d over ``_commits.json``.
+
+    Step 4 may overwrite the directories it reads because a dynamic
+    overwrite writes all task output under ``state/.spark-staging-<job>/``
+    and swaps bucket directories in only at job commit, after every task,
+    and so every read of the old buckets, has finished. File listing skips
+    ``.``-prefixed names, so the staging directory of a killed write is
+    invisible to readers and to later writes.
+
+    Crash windows. A crash between steps 4 and 5 leaves the batch written
+    but not committed, and the restart replays it onto its own output; the
+    swap in step 4 is per bucket, so a crash inside it leaves some touched
+    buckets folded and others not. ``fold`` must therefore be idempotent
+    per bucket: folding a batch onto state that already holds it changes
+    nothing. The swap deletes a bucket directory before renaming its
+    replacement in, and a crash between the two loses that bucket; this
+    protocol does not close that window.
+    """
 
     spark: SparkSession
     state_dir: str
     n_buckets: int = 16
-    _committed: set[int] = field(default_factory=set)
 
-    # -- identical commit/bucket plumbing to CdcParquetSink ---------------
+    def fold(self, batch_df: DataFrame, old_touched: DataFrame | None) -> DataFrame:
+        """The new rows of the buckets ``batch_df`` touches, without the
+        bucket column. ``old_touched`` holds those buckets' current rows,
+        or is None before the first write."""
+        raise NotImplementedError
+
+    @property
+    def _state_path(self) -> str:
+        return os.path.join(self.state_dir, "state")
+
     @property
     def _commit_log(self) -> str:
         return os.path.join(self.state_dir, "_commits.json")
@@ -376,128 +263,149 @@ class Scd2ParquetSink:
                 return set(json.load(f))
         return set()
 
-    def _save_commits(self) -> None:
-        # the parquet write normally creates state_dir, but a committed
-        # NO-OP batch (empty feed) reaches here first — create the dir
-        # (round-10 EMPTY-fixture catch, found by the CLI-on-empty run)
+    def _save_commits(self, committed: set[int]) -> None:
+        # a committed no-op batch can come before any state write, so the
+        # directory may not exist yet
         os.makedirs(self.state_dir, exist_ok=True)
-        with open(self._commit_log, "w") as f:
-            json.dump(sorted(self._committed), f)
+        tmp = self._commit_log + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(sorted(committed), f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._commit_log)
 
-    def _bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
-        )
-
-    def state(self) -> DataFrame | None:
-        path = os.path.join(self.state_dir, "state")
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
+    def state(self, schema: T.StructType | None = None) -> DataFrame | None:
+        """The state table with its ``bucket`` column, or None when no
+        bucket directory exists yet. Every other read error raises:
+        unreadable state must never pass for empty state."""
+        path = self._state_path
+        if not os.path.isdir(path) or not any(
+            d.startswith("bucket=") for d in os.listdir(path)
+        ):
             return None
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
-    # -- the SCD2 fold -----------------------------------------------------
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._committed = self._load_commits()
-        if batch_id in self._committed:
+        committed = self._load_commits()
+        if batch_id in committed:
             return
-        delta_rows = self._bucket(scd2_versions(batch_df))
-        first_ts = batch_df.groupBy("key").agg(
-            F.min(F.struct("ts", "seq")).alias("_first_delta")
-        )
-        old = self.state()
-        path = os.path.join(self.state_dir, "state")
-        tmp = os.path.join(self.state_dir, f"state_tmp_{batch_id}")
-        try:
-            if old is None:
-                new = delta_rows
-            else:
-                # Touched buckets come from ALL batch keys — scd2_versions
-                # drops delete envelopes, so deriving buckets from
-                # delta_rows would skip a bucket whose micro-batch slice is
-                # all-deletes and leave its keys' open rows unclosed,
-                # breaking the stream==batch invariant the oracle asserts.
-                touched = [
-                    r["bucket"]
-                    for r in self._bucket(batch_df.select("key").distinct())
-                    .select("bucket")
-                    .distinct()
-                    .collect()
-                ]
-                old_t = old.filter(F.col("bucket").isin(touched))
-                # close-guard: strictly-greater (ts, seq) — replay-safe
-                # (see class docstring). Field names aliased to match the
-                # aggregated struct so the comparison is well-typed. The
-                # key joins are NULL-SAFE: a NULL document key is a real
-                # CDC key group (the window oracle partitions it as one),
-                # and a plain equi-join left the NULL key's open rows
-                # unclosed forever (round-9 NULL-fixture catch).
-                row_pos = F.struct(
-                    F.col("valid_from").alias("ts"), F.col("seq").alias("seq")
+        bucket = F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
+        touched = [r[0] for r in batch_df.select(bucket).distinct().collect()]
+        if touched:
+            new = self.fold(batch_df, None)
+            old = self.state(
+                T.StructType(
+                    new.schema.fields + [T.StructField("bucket", T.LongType())]
                 )
-                ft = first_ts.select(F.col("key").alias("_ft_key"), "_first_delta")
-                closed = (
-                    old_t.join(
-                        F.broadcast(ft),
-                        F.col("key").eqNullSafe(F.col("_ft_key")),
-                        "left",
-                    )
-                    .drop("_ft_key")
-                    .withColumn(
-                        "valid_to",
-                        F.when(
-                            F.col("is_current")
-                            & F.col("_first_delta").isNotNull()
-                            & (row_pos < F.col("_first_delta")),
-                            F.col("_first_delta.ts"),
-                        ).otherwise(F.col("valid_to")),
-                    )
-                    .withColumn("is_current", F.col("valid_to").isNull())
-                    .drop("_first_delta")
-                )
-                # add-guard: only version rows not already folded (replay /
-                # partial-overwrite safe); (key, seq) is the version PK —
-                # null-safe on key for the same reason as the close-guard.
-                ex = old_t.select(
-                    F.col("key").alias("_ex_key"), F.col("seq").alias("_ex_seq")
-                )
-                fresh = delta_rows.join(
-                    ex,
-                    F.col("key").eqNullSafe(F.col("_ex_key"))
-                    & (F.col("seq") == F.col("_ex_seq")),
-                    "left_anti",
-                )
-                new = closed.unionByName(fresh)
-            if new.isEmpty():
-                # nothing to fold (e.g. an all-delete batch for keys the
-                # state never saw) — writing an empty tmp dir would fail on
-                # read-back; the batch is a committed no-op instead
-                self._committed.add(batch_id)
-                self._save_commits()
-                return
-            new.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+            )
+            if old is not None:
+                old_touched = old.filter(F.col("bucket").isin(touched)).drop("bucket")
+                new = self.fold(batch_df, old_touched)
             (
-                self.spark.read.parquet(tmp)
+                new.withColumn("bucket", bucket)
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
-                .parquet(path)
+                .parquet(self._state_path)
             )
-            self._committed.add(batch_id)
-            self._save_commits()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        committed.add(batch_id)
+        self._save_commits(committed)
+
+
+class CdcParquetSink(BucketedParquetSink):
+    """Last-writer-wins state table: one row per key, tombstones kept.
+    ``fold`` is ``reconcile(old ∪ batch)``; reconcile is associative and
+    idempotent, so a replayed batch folds to the same rows."""
+
+    def fold(self, batch_df: DataFrame, old_touched: DataFrame | None) -> DataFrame:
+        if old_touched is None:
+            return reconcile(batch_df)
+        return merge_states(old_touched, batch_df)
+
+    def current(self) -> DataFrame:
+        st = self.state()
+        if st is None:
+            # an empty feed writes no state: the sink table is empty
+            return self.spark.createDataFrame(
+                [],
+                "key long, last_ts timestamp, last_event_type string,"
+                " last_value double, last_k long",
+            )
+        return current_state(st)
+
+
+class Scd2ParquetSink(BucketedParquetSink):
+    """SCD2 history table maintained incrementally: the streaming twin of
+    the batch ``cdc_scd2`` window, with the same oracle (micro-batch
+    folding must be invisible).
+
+    ``fold``: the batch's own envelopes become version rows through
+    ``scd2_versions``; each touched key's open row in state is closed at
+    the key's first (ts, seq) in the batch (delete envelopes close without
+    opening). Correct because per-key (ts, seq) never decreases across
+    micro-batches, the oplog's total order (SURVEY §1.1).
+
+    Two per-row guards make the fold idempotent, as the base class
+    requires, and are no-ops on a first delivery:
+
+    - close-guard: an open row is closed only when the batch's first
+      (ts, seq) for its key is strictly greater than the row's own
+      (valid_from, seq). A replayed batch's first envelope never out-orders
+      the open row it created, so that row is not re-closed with an older
+      timestamp.
+    - add-guard: version rows are added through a (key, seq) anti-join
+      against the touched state, so rows already folded are not
+      duplicated.
+
+    Key joins are null-safe: a NULL document key is one key group, as the
+    batch window partitions it.
+    """
+
+    def fold(self, batch_df: DataFrame, old_touched: DataFrame | None) -> DataFrame:
+        versions = scd2_versions(batch_df)
+        if old_touched is None:
+            return versions
+        first = batch_df.groupBy(F.col("key").alias("_ft_key")).agg(
+            F.min(F.struct("ts", "seq")).alias("_first_delta")
+        )
+        # aliased to the aggregated struct's field names so the comparison
+        # is well-typed
+        row_pos = F.struct(F.col("valid_from").alias("ts"), F.col("seq").alias("seq"))
+        closed = (
+            old_touched.join(
+                F.broadcast(first), F.col("key").eqNullSafe(F.col("_ft_key")), "left"
+            )
+            .drop("_ft_key")
+            .withColumn(
+                "valid_to",
+                F.when(
+                    F.col("is_current")
+                    & F.col("_first_delta").isNotNull()
+                    & (row_pos < F.col("_first_delta")),
+                    F.col("_first_delta.ts"),
+                ).otherwise(F.col("valid_to")),
+            )
+            .withColumn("is_current", F.col("valid_to").isNull())
+            .drop("_first_delta")
+        )
+        existing = old_touched.select(
+            F.col("key").alias("_ex_key"), F.col("seq").alias("_ex_seq")
+        )
+        fresh = versions.join(
+            existing,
+            F.col("key").eqNullSafe(F.col("_ex_key")) & (F.col("seq") == F.col("_ex_seq")),
+            "left_anti",
+        )
+        return closed.unionByName(fresh)
 
     def history(self) -> DataFrame:
         st = self.state()
         if st is None:
-            # EMPTY feed: zero envelopes → empty SCD2 history, not an
-            # error (round-10 EMPTY-fixture catch; schema is static).
+            # an empty feed writes no state: the history is empty
             return self.spark.createDataFrame(
                 [],
                 "key long, seq long, value double, valid_from timestamp,"
                 " valid_to timestamp, is_current boolean",
             )
-        return st.select(
-            "key", "seq", "value", "valid_from", "valid_to", "is_current"
-        )
+        return st.select("key", "seq", "value", "valid_from", "valid_to", "is_current")
