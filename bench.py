@@ -1,16 +1,13 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., plus box telemetry}.
 
-Timing methodology: one warm-up pass of a trivial action to absorb JVM/
-session startup, then each query is executed three times with a full
-materializing action (sum of xxhash64 over ALL output columns — count()
-alone would let Catalyst prune the final projection) and the BEST of the
-three is reported — the standard way to suppress one-time codegen/JIT cost
-and co-tenant noise (measured first/best spreads on a loaded box reach
-2-13×) while still paying every per-run cost (scan, shuffle, compute).
-All raw timings go to stderr.
+Timing method (``mongodb_mysql_cdc_spark.timing``): one warm-up pass to
+absorb JVM/session startup, then each query is built and run through the
+full materializing action (row count + bit_xor of xxhash64 over ALL output
+columns) three times, and the BEST of the three is reported. All raw
+timings go to stderr.
 """
 
 from __future__ import annotations
@@ -18,73 +15,29 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from mongodb_mysql_cdc_spark import registry
 from mongodb_mysql_cdc_spark.session import get_session
-
-# Headline set: one representative per operator family (scan/agg, join
-# strategies, window, set-op, CDC apply, dedup, similarity). Falls back to
-# whatever subset is registered so bench never breaks mid-build.
-HEADLINE = [
-    "pricing_summary",
-    "join_inner_hash",
-    "join_broadcast",
-    "join_asof",
-    "topk_per_group",
-    "win_running",
-    "agg_rollup",
-    "cdc_apply_batch",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "sim_search_topk",
-    "sim_search_lsh",
-    "tfidf",
-    "text_stats",
-]
+from mongodb_mysql_cdc_spark.timing import HEADLINE, materialize, time_runs, warm_up
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # Box-state telemetry (round 13): the r12 official bench ran on a box
-    # still digesting hours of sweeps and landed at 2.02x the reference
-    # point while three same-HEAD quiet-box measurements sat in-band.
-    # Recording the 1-min load average INSIDE the artifact makes that
-    # adjudication mechanical: a high load1_start explains an outlier
-    # value without any prose reconciliation.
+    # The 1-min load average at start and end is recorded in the artifact so
+    # an outlier value can be attributed to a busy box from the artifact alone.
     load1_start = round(os.getloadavg()[0], 2)
     spark = get_session("bench")
     qs = registry.queries()
+    # Registered headline queries only, so bench never breaks mid-build.
     names = [n for n in HEADLINE if n in qs]
-
-    # Warm-up: JVM, codegen, parquet datasource init + footer caches — the
-    # one-time infrastructure costs a long-lived cluster never re-pays.
-    # Reads a 5-row table so no query's actual data is pre-warmed.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
-    from pyspark.sql import functions as F
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     for name in names:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            # Full materialization: hash every output column into one scalar.
-            # A bare count() lets Catalyst prune the final projection, so
-            # map-heavy queries would be timed without computing their output
-            # columns; xxhash64(struct(*)) forces every column to be produced.
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                # bit_xor, not sum: summing 64-bit hashes overflows under ANSI
-                F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))).alias("h"),
-            ).collect()[0]
-            n = row["n"]
-            runs.append(time.perf_counter() - t0)
+        runs, (n, _) = time_runs(3, lambda: materialize(qs[name](spark, sf_dir)))
         timings[name] = round(min(runs), 3)
         print(
             f"# {name}: {timings[name]:.3f}s best of {[round(r, 3) for r in runs]} ({n} rows)",
@@ -102,11 +55,9 @@ def main() -> None:
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "load1_start": load1_start,
                 "load1_end": round(os.getloadavg()[0], 2),
-                # Auditability (r13 verdict item 4): the session honors
-                # $SPARK_GRAFT_CPUS (session.py master=local[cpus]); record
-                # what this run actually used so the driver's 8-vs-32-core
-                # scaling probe can confirm the env contract from the
-                # artifact alone.
+                # What this run actually used (the session honors
+                # $SPARK_GRAFT_CPUS), so a core-scaling probe can confirm
+                # the env contract from the artifact alone.
                 "cpus": spark.sparkContext.defaultParallelism,
                 "master": spark.sparkContext.master,
                 "shuffle_partitions": int(

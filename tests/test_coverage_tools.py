@@ -103,14 +103,15 @@ def test_stale_warns_on_unresolvable_round_marker(capsys):
 
 
 def test_subsets_are_registered_and_headline_synced():
-    """tools/subsets.py mechanizes the sweep subsets (round 9). A typo'd
-    name would silently shrink a sweep's coverage — every subset member
-    must be a registered query, and the HEADLINE list must stay in
-    lockstep with bench.py's (the bench and the sweeps must measure the
-    same queries)."""
+    """tools/subsets.py mechanizes the sweep subsets. A typo'd name would
+    silently shrink a sweep's coverage — every subset member must be a
+    registered query. bench.py and the sweeps must measure the same
+    headline queries, so both must use the one list in
+    mongodb_mysql_cdc_spark/timing.py rather than a copy."""
+    import bench
     import subsets
 
-    from mongodb_mysql_cdc_spark import registry
+    from mongodb_mysql_cdc_spark import registry, timing
 
     qs = registry.queries()
     for label, names in subsets.SUBSETS.items():
@@ -118,20 +119,8 @@ def test_subsets_are_registered_and_headline_synced():
         assert not missing, f"subset {label}: unregistered {missing}"
         assert len(names) == len(set(names)), f"subset {label}: duplicates"
 
-    # Parse HEADLINE from the AST (like the registry window check) —
-    # exec'ing a text prefix ran bench.py's module-level imports and broke
-    # if any earlier def was named main (round-9 ADVICE).
-    import ast
-
-    tree = ast.parse((ROOT / "bench.py").read_text())
-    headline = None
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Assign) and any(
-            isinstance(t, ast.Name) and t.id == "HEADLINE" for t in node.targets
-        ):
-            headline = ast.literal_eval(node.value)
-    assert headline is not None, "bench.py has no literal HEADLINE assignment"
-    assert subsets.HEADLINE == headline
+    assert bench.HEADLINE is timing.HEADLINE
+    assert subsets.HEADLINE is timing.HEADLINE
 
 
 def test_fwd_unbounded_frame_rule_fires_and_spares(spark):

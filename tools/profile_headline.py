@@ -1,14 +1,14 @@
-"""Optimization-round profiler (guide §1: measure first).
+"""Per-query profile of the headline bench queries (or any --queries list).
 
-For each headline bench query (or any --queries list), decomposes one
-bench iteration into:
+Times each query with the shared method of ``mongodb_mysql_cdc_spark.timing``
+(warm-up, then best of --n) in three columns:
 
-  build   DataFrame construction (driver-side: parquet footer reads,
+  build   DataFrame construction alone (driver-side: parquet footer reads,
           py4j expression building — no job runs)
-  noop    df.write.format("noop") — computes every column of every row,
-          no driver collect, no extra aggregate (guide §1.4)
-  bench   the exact bench.py action (count + bit_xor(xxhash64(struct(*)))
-          + collect) — what BENCH_rNN.json times
+  noop    build + a noop-sink write: computes every column of every row,
+          with no driver collect and no extra aggregate
+  bench   build + the hash action — the per-query number bench.py reports
+          and BENCH_rNN.json records
 
 and writes `.explain("formatted")` to plans/<round>/<name>_<tag>.txt.
 
@@ -17,40 +17,34 @@ Usage:
                                    [--queries a,b,c] [--sf DIR] [--no-plans]
                                    [--executed]
 
---executed additionally runs each query once and appends the POST-RUN
-plan (AQE final plan: ReusedExchange / AQEShuffleRead visible) to the
-dump — the static explain only shows isFinalPlan=false.
+--n 0 only writes the plans. --executed additionally runs each query once
+and appends the POST-RUN plan (AQE final plan: ReusedExchange /
+AQEShuffleRead visible) to the dump — the static explain only shows
+isFinalPlan=false.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import functions as F
-
 from mongodb_mysql_cdc_spark.registry import queries
 from mongodb_mysql_cdc_spark.session import get_session
-
-HEADLINE = [
-    "pricing_summary", "join_inner_hash", "join_broadcast", "join_asof",
-    "topk_per_group", "win_running", "agg_rollup", "cdc_apply_batch",
-    "dedup_exact", "dedup_minhash_lsh", "sim_search_topk", "sim_search_lsh",
-    "tfidf", "text_stats",
-]
+from mongodb_mysql_cdc_spark.timing import HEADLINE, materialize, time_runs, warm_up, write_noop
 
 
-def bench_action(df) -> None:
-    df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))).alias("h"),
-    ).collect()
+def explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def main() -> None:
@@ -60,17 +54,15 @@ def main() -> None:
     ap.add_argument("--queries", default=None)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--no-plans", action="store_true")
-    ap.add_argument("--plans-only", action="store_true")
     ap.add_argument("--round", default="r14")
     ap.add_argument("--executed", action="store_true")
     args = ap.parse_args()
 
     names = args.queries.split(",") if args.queries else HEADLINE
     spark = get_session("profile")
+    sc = spark.sparkContext
     qs = queries()
-    # Same warm-up as bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{args.sf}/region.parquet").count()
+    warm_up(spark, args.sf)
 
     plans_dir = Path(__file__).resolve().parent.parent / "plans" / args.round
     plans_dir.mkdir(parents=True, exist_ok=True)
@@ -78,23 +70,12 @@ def main() -> None:
     out = {}
     for name in names:
         fn = qs[name]
-        builds, noops, benches = [], [], []
-        for _ in range(0 if args.plans_only else args.n):
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            t1 = time.perf_counter()
-            spark.sparkContext.setJobDescription(f"{name}: noop")
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            spark.sparkContext.setJobDescription(f"{name}: bench-action")
-            df2 = fn(spark, args.sf)
-            t3 = time.perf_counter()
-            bench_action(df2)
-            t4 = time.perf_counter()
-            spark.sparkContext.setJobDescription(None)
-            builds.append(t1 - t0)
-            noops.append(t2 - t1)
-            benches.append(t4 - t3)
+        builds, _ = time_runs(args.n, lambda: fn(spark, args.sf))
+        sc.setJobDescription(f"{name}: noop")
+        noops, _ = time_runs(args.n, lambda: write_noop(fn(spark, args.sf)))
+        sc.setJobDescription(f"{name}: bench-action")
+        benches, _ = time_runs(args.n, lambda: materialize(fn(spark, args.sf)))
+        sc.setJobDescription(None)
         rec = {
             "build": round(min(builds, default=0.0), 3),
             "noop": round(min(noops, default=0.0), 3),
@@ -103,23 +84,14 @@ def main() -> None:
         out[name] = rec
         print(f"# {name}: build={rec['build']} noop={rec['noop']} bench={rec['bench']}", file=sys.stderr)
         if not args.no_plans:
-            import contextlib
-            import io
-
             df = fn(spark, args.sf)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            text = buf.getvalue()
+            text = explain(df)
             if args.executed:
                 # collect() runs THIS DataFrame's QueryExecution, so the
                 # subsequent explain shows the AQE final plan (a noop
                 # write would execute a separate wrapping QE instead)
                 df.collect()
-                buf2 = io.StringIO()
-                with contextlib.redirect_stdout(buf2):
-                    df.explain("formatted")
-                text += "\n== Post-run (AQE final) plan ==\n" + buf2.getvalue()
+                text += "\n== Post-run (AQE final) plan ==\n" + explain(df)
             (plans_dir / f"{name}_{args.tag}.txt").write_text(text)
     print(json.dumps({"sf": args.sf, "n": args.n, "timings": out}))
 
