@@ -24,6 +24,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--snapshot-chunks", type=int, default=1)
     ap.add_argument("--verify", action="store_true")
     args = ap.parse_args(argv)
+    if not 0 <= args.snapshot_chunks <= args.chunks:
+        ap.error(f"--snapshot-chunks must be in 0..--chunks ({args.chunks})")
 
     from mongodb_mysql_cdc_spark.replication import ReplicationPipeline, expected_state
     from mongodb_mysql_cdc_spark.session import get_session

@@ -7,7 +7,7 @@ MongoDB database into MySQL, then keep it in sync".
                                sink_dir="/tmp/replica")
     state = pipe.run()          # snapshot + tail-to-current, returns the
                                 # queryable current-state table
-    pipe.status()               # committed batches, state rows, resume pos
+    pipe.status()               # committed batch ids, state and live rows
 
 Harness mapping: the ``events`` table is the designated stream table; its
 time-ordered replay stands in for the oplog/change-stream cursor, and the
@@ -30,11 +30,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from mongodb_mysql_cdc_spark.catalog import load
 from mongodb_mysql_cdc_spark.sources.adapters import EnvelopeSource, ParquetReplaySource
-from mongodb_mysql_cdc_spark.streaming.apply import CdcParquetSink, reconcile
+from mongodb_mysql_cdc_spark.sources.cdc import OP_DELETE
+from mongodb_mysql_cdc_spark.streaming.apply import CdcParquetSink
 from mongodb_mysql_cdc_spark.streaming.replay import run_to_completion
+
+SNAPSHOT_BATCH_ID = -1  # the snapshot's epoch in the sink's commit log
 
 
 @dataclass
@@ -68,17 +71,24 @@ class ReplicationPipeline:
         """Bulk-load the consistent starting state: the source's snapshot
         envelopes applied as ONE batch (batch id -1, guarded like any
         other epoch)."""
-        self._sink.apply_batch(self.source.snapshot(), batch_id=-1)
+        self._sink.apply_batch(self.source.snapshot(), batch_id=SNAPSHOT_BATCH_ID)
         return self
 
     # -- entry point B+C: change-stream tail + apply ------------------------
     def tail(self) -> "ReplicationPipeline":
         """Open the source's change feed (offsets checkpointed) and fold
-        each micro-batch into the sink idempotently."""
-        # Events already folded by the snapshot may be re-delivered by a
-        # stream starting from offset zero — the batch-id guard plus LWW
-        # idempotence make the overlap harmless (same replay argument as
-        # a resume-token restart).
+        each micro-batch into the sink idempotently. The snapshot must be
+        committed first: the feed starts at the snapshot's position, so
+        without it the snapshot's events would never be applied."""
+        if SNAPSHOT_BATCH_ID not in self._sink._load_commits():
+            raise RuntimeError(
+                f"tail() needs the snapshot committed in {self.sink_dir}: the "
+                "change feed starts after the snapshot's position. Call "
+                "snapshot() first, or run()."
+            )
+        # The checkpoint keeps the stream's offsets, so a restarted tail
+        # resumes where the last one committed; a batch re-delivered after
+        # a crash hits the sink's batch-id guard.
         env = self.source.stream()
         q = (
             env.writeStream.foreachBatch(self._sink.apply_batch)
@@ -100,12 +110,19 @@ class ReplicationPipeline:
         return self._sink.current()
 
     def status(self) -> dict:
-        state = self._sink.state()
+        """Committed batch ids plus state and live (non-tombstone) row
+        counts, from one aggregate over the ``op`` column."""
+        state = self._sink.state(T.StructType([T.StructField("op", T.StringType())]))
+        rows = live = 0
+        if state is not None:
+            rows, live = state.agg(
+                F.count(F.lit(1)), F.count_if(F.col("op") != OP_DELETE)
+            ).first()
         return {
             "sink_dir": self.sink_dir,
             "committed_batches": sorted(self._sink._load_commits()),
-            "state_rows": 0 if state is None else state.count(),
-            "live_rows": 0 if state is None else self.current().count(),
+            "state_rows": rows,
+            "live_rows": live,
         }
 
 def expected_state(spark: SparkSession, source_dir: str) -> DataFrame:

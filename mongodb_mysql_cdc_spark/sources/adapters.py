@@ -8,9 +8,12 @@ An ``EnvelopeSource`` yields the normalized Debezium-style envelope
 
 - ``snapshot()``  — a BATCH DataFrame: the consistent initial state
   (entry point A);
-- ``stream()``    — a STREAMING DataFrame: the ordered change feed
-  (entry point B). Offsets/resume tokens are the stream's checkpoint
-  concern, not the adapter's.
+- ``stream()``    — a STREAMING DataFrame: the ordered change feed from
+  the position the snapshot recorded on (entry point B). It carries every
+  change the snapshot does not contain; it may re-deliver changes at that
+  position (LWW apply makes that harmless) but never starts before it.
+  Progress after that start is the stream's checkpoint concern, not the
+  adapter's.
 
 ``ParquetReplaySource`` is the harness implementation (time-ordered chunk
 replay over the events table). ``MongoChangeStreamSource`` documents the
@@ -36,7 +39,7 @@ class EnvelopeSource(Protocol):
 
     def snapshot(self) -> DataFrame: ...  # batch: initial consistent state
 
-    def stream(self) -> DataFrame: ...  # streaming: the change feed
+    def stream(self) -> DataFrame: ...  # streaming: the feed after the snapshot
 
 
 @dataclass
@@ -44,10 +47,11 @@ class ParquetReplaySource:
     """Harness source: the ``events`` table replayed as a time-ordered
     file stream (one chunk per micro-batch — the oplog stand-in).
 
-    ``snapshot()`` returns the first ``snapshot_chunks`` chunks as one
-    batch; ``stream()`` replays ALL chunks from offset zero — the overlap
-    with the snapshot is intentional and harmless (LWW idempotence + the
-    sink's batch-id guard), mirroring a resume-token restart."""
+    ``snapshot()`` returns chunks ``1..snapshot_chunks`` as one batch;
+    ``stream()`` is a file stream over chunks ``snapshot_chunks+1..n_chunks``
+    only, so the chunk index is the snapshot's position and no event is
+    read by both. ``snapshot_chunks=0`` is an empty snapshot and a stream
+    over every chunk; ``snapshot_chunks == n_chunks`` is an empty stream."""
 
     spark: SparkSession
     source_dir: str
@@ -55,6 +59,13 @@ class ParquetReplaySource:
     snapshot_chunks: int = 1
     dir_prefix: str = "replica"
     _staged: str | None = field(default=None, init=False)
+
+    def __post_init__(self) -> None:
+        if not 0 <= self.snapshot_chunks <= self.n_chunks:
+            raise ValueError(
+                f"snapshot_chunks must be in 0..n_chunks ({self.n_chunks}), "
+                f"got {self.snapshot_chunks}"
+            )
 
     def _stage(self) -> str:
         from mongodb_mysql_cdc_spark.streaming.replay import stage_event_chunks
@@ -67,17 +78,29 @@ class ParquetReplaySource:
         return self._staged
 
     def snapshot(self) -> DataFrame:
+        from mongodb_mysql_cdc_spark.streaming.replay import EVENTS_STREAM_SCHEMA
+
         staged = self._stage()
         parts = [
             os.path.join(staged, f"chunk={i:04d}")
             for i in range(1, self.snapshot_chunks + 1)
         ]
-        return envelopes_from_events(self.spark.read.parquet(*parts))
+        # the stream's schema, given explicitly: no inference job, and no
+        # paths reads as an empty snapshot instead of failing to infer
+        return envelopes_from_events(
+            self.spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(*parts)
+        )
 
     def stream(self) -> DataFrame:
         from mongodb_mysql_cdc_spark.streaming.replay import read_event_stream
 
-        return envelopes_from_events(read_event_stream(self.spark, self._stage()))
+        after = ",".join(
+            f"{i:04d}" for i in range(self.snapshot_chunks + 1, self.n_chunks + 1)
+        )
+        # a Hadoop brace glob over the post-snapshot chunk dirs; with none
+        # left, ``chunk={}`` matches nothing and the stream is empty
+        path = os.path.join(self._stage(), f"chunk={{{after}}}")
+        return envelopes_from_events(read_event_stream(self.spark, path))
 
 
 @dataclass
@@ -91,8 +114,16 @@ class MongoChangeStreamSource:
     uri).option("database", db).option("collection", coll).load()``
     projected into ENVELOPE_SCHEMA with op='r' (Debezium snapshot reads).
 
-    stream(): ``spark.readStream.format("mongodb")`` with
-    ``change.stream.publish.full.document.only=false``, then project
+    Record the cluster time (the ``operationTime`` of a ``hello``
+    command) before the snapshot read. stream() starts at that time,
+    MongoDB's ``startAtOperationTime``:
+    ``spark.readStream.format("mongodb")`` with
+    ``change.stream.startup.mode=timestamp``,
+    ``change.stream.startup.mode.timestamp.start.at.operation.time`` set
+    to the recorded time and
+    ``change.stream.publish.full.document.only=false``. Changes between
+    that time and the end of the snapshot read arrive in both; the LWW
+    apply makes that overlap harmless. Then project
     ``operationType``→op (insert→c/update|replace→u/delete→d),
     ``clusterTime``→ts, ``_id`` (resume token order)→seq,
     ``documentKey._id``→key, ``fullDocument``→after.

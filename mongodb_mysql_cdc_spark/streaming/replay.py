@@ -139,7 +139,8 @@ def stage_heartbeats(
 
 
 def read_event_stream(spark: SparkSession, staged_dir: str) -> DataFrame:
-    """Open the staged dir as a file stream, one chunk per micro-batch."""
+    """Open a staged dir, or a glob over its chunk dirs, as a file stream,
+    one chunk per micro-batch."""
     return (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)

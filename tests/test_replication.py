@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from mongodb_mysql_cdc_spark.replication import ReplicationPipeline, expected_state
 
 
@@ -126,3 +128,81 @@ def test_source_adapter_seam(spark, sf_dir):
     assert shape(replay.snapshot().schema) == shape(ENVELOPE_SCHEMA)
     with pytest.raises(RuntimeError, match="mongo-spark-connector"):
         mongo.stream()
+
+
+def _stream_read_chunks(sink: str) -> set[str]:
+    """The chunk dirs of every file the tail's stream checkpoint lists."""
+    import json
+    import os
+    import re
+
+    log_dir = os.path.join(sink, "_checkpoint", "sources", "0")
+    names = os.listdir(log_dir) if os.path.isdir(log_dir) else []
+    chunks = set()
+    for name in names:
+        if name.startswith("."):
+            continue
+        with open(os.path.join(log_dir, name)) as f:
+            for line in f:
+                if line.startswith("{"):
+                    chunks.add(re.search(r"chunk=\d+", json.loads(line)["path"]).group())
+    return chunks
+
+
+@pytest.mark.parametrize("n,s", [(4, 1), (6, 2), (3, 3), (3, 0)])
+def test_tail_starts_after_snapshot(spark, sf_dir, tmp_path, n, s):
+    """The stream reads only the chunks after the snapshot's position: its
+    checkpoint lists no snapshot chunk, it commits one batch per remaining
+    chunk after the snapshot epoch, and the state still equals the batch
+    fold of the whole history. s == n is an empty tail; s == 0 an empty
+    snapshot and a tail over every chunk."""
+    sink = str(tmp_path / "sink")
+    pipe = ReplicationPipeline(spark, sf_dir, sink, n_chunks=n, snapshot_chunks=s)
+    state = pipe.run()
+    assert _stream_read_chunks(sink) == {f"chunk={i:04d}" for i in range(s + 1, n + 1)}
+    assert pipe.status()["committed_batches"] == [-1, *range(n - s)]
+    want = expected_state(spark, sf_dir)
+    cols = sorted(want.columns)
+    assert _rows(state.select(*cols)) == _rows(want.select(*cols))
+
+
+def test_tail_without_snapshot_raises(spark, sf_dir, tmp_path):
+    """The feed starts after the snapshot's position, so a tail with no
+    committed snapshot would drop the snapshot's events: it must refuse
+    before opening the stream."""
+    sink = str(tmp_path / "sink")
+    pipe = ReplicationPipeline(spark, sf_dir, sink, n_chunks=2)
+    with pytest.raises(RuntimeError, match="snapshot"):
+        pipe.tail()
+    assert pipe.status()["committed_batches"] == []
+    assert _stream_read_chunks(sink) == set()
+
+
+def test_snapshot_chunks_out_of_range(spark, sf_dir, tmp_path, capsys):
+    """More snapshot chunks than chunks is refused at construction, before
+    anything is staged, and by the CLI as a usage error."""
+    from mongodb_mysql_cdc_spark.__main__ import main
+
+    for s in (3, -1):
+        with pytest.raises(ValueError, match="snapshot_chunks"):
+            ReplicationPipeline(spark, sf_dir, str(tmp_path / "sink"), n_chunks=2, snapshot_chunks=s)
+    with pytest.raises(SystemExit) as exc:
+        main(["--source", sf_dir, "--chunks", "2", "--snapshot-chunks", "3"])
+    assert exc.value.code == 2
+    assert "--snapshot-chunks" in capsys.readouterr().err
+
+
+def test_status_is_one_scan(spark, sf_dir, tmp_path):
+    """status() counts state and live rows with one aggregate: at most two
+    Spark jobs (AQE runs a global aggregate as a shuffle stage and a
+    result stage), with the same values as counting each table."""
+    pipe = ReplicationPipeline(spark, sf_dir, str(tmp_path / "sink"), n_chunks=2)
+    pipe.run()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    status = pipe.status()
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 2
+    assert status["state_rows"] == pipe._sink.state().count()
+    assert status["live_rows"] == pipe.current().count()
+    assert status["live_rows"] < status["state_rows"]  # the feed has deletes
