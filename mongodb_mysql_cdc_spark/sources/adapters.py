@@ -17,9 +17,10 @@ An ``EnvelopeSource`` yields the normalized Debezium-style envelope
 
 ``ParquetReplaySource`` is the harness implementation (time-ordered chunk
 replay over the events table). ``MongoChangeStreamSource`` documents the
-real-deployment mapping and fails loudly: the MongoDB Spark connector is
+real-deployment wiring and fails loudly: the MongoDB Spark connector is
 not in this container, and shipping a pretend implementation would be
-worse than an explicit seam.
+worse than an explicit seam. Its field mapping, change events →
+envelope, is the pure transform ``change_stream_envelopes``.
 """
 
 from __future__ import annotations
@@ -29,8 +30,16 @@ from dataclasses import dataclass, field
 from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from mongodb_mysql_cdc_spark.sources.cdc import envelopes_from_events
+from mongodb_mysql_cdc_spark.sources.cdc import (
+    AFTER_SCHEMA,
+    OP_CREATE,
+    OP_DELETE,
+    OP_UPDATE,
+    envelopes_from_events,
+)
 
 
 @runtime_checkable
@@ -103,6 +112,54 @@ class ParquetReplaySource:
         return envelopes_from_events(read_event_stream(self.spark, path))
 
 
+# One MongoDB change event as the connector delivers it, with the resume
+# token ``_id`` already reduced to its position in resume-token order.
+CHANGE_STREAM_SCHEMA = T.StructType(
+    [
+        T.StructField("_id", T.LongType()),
+        T.StructField("operationType", T.StringType()),
+        T.StructField("clusterTime", T.TimestampType()),
+        T.StructField(
+            "ns",
+            T.StructType(
+                [T.StructField("db", T.StringType()), T.StructField("coll", T.StringType())]
+            ),
+        ),
+        T.StructField("documentKey", T.StructType([T.StructField("_id", T.LongType())])),
+        T.StructField("fullDocument", AFTER_SCHEMA),
+    ]
+)
+
+
+def change_stream_envelopes(changes: DataFrame) -> DataFrame:
+    """Change events (``CHANGE_STREAM_SCHEMA``) → the envelope
+    (``ENVELOPE_SCHEMA``), on batch and streaming DataFrames alike:
+
+    - ``operationType`` → op: insert → c, update and replace → u,
+      delete → d. Events of any other type (drop, rename, invalidate)
+      change no document and are dropped;
+    - ``clusterTime`` → ts, ``_id`` → seq, ``documentKey._id`` → key;
+    - ``fullDocument`` → after, NULL on deletes. An update whose document
+      was deleted before the update lookup also has none; the later
+      delete wins that key under LWW;
+    - ``ns`` → source (db, table)."""
+    op = (
+        F.when(F.col("operationType") == "insert", OP_CREATE)
+        .when(F.col("operationType").isin("update", "replace"), OP_UPDATE)
+        .when(F.col("operationType") == "delete", OP_DELETE)
+    )
+    return changes.select(
+        op.alias("op"),
+        F.col("clusterTime").alias("ts"),
+        F.col("_id").alias("seq"),
+        F.col("documentKey._id").alias("key"),
+        F.col("fullDocument").alias("after"),
+        F.struct(F.col("ns.db").alias("db"), F.col("ns.coll").alias("table")).alias(
+            "source"
+        ),
+    ).filter(F.col("op").isNotNull())
+
+
 @dataclass
 class MongoChangeStreamSource:
     """The production adapter shape: MongoDB → envelope via the official
@@ -123,10 +180,9 @@ class MongoChangeStreamSource:
     to the recorded time and
     ``change.stream.publish.full.document.only=false``. Changes between
     that time and the end of the snapshot read arrive in both; the LWW
-    apply makes that overlap harmless. Then project
-    ``operationType``→op (insert→c/update|replace→u/delete→d),
-    ``clusterTime``→ts, ``_id`` (resume token order)→seq,
-    ``documentKey._id``→key, ``fullDocument``→after.
+    apply makes that overlap harmless. Open the stream with
+    ``change.stream.lookup.full.document=updateLookup`` so updates carry
+    the whole document, then map it through ``change_stream_envelopes``.
     """
 
     spark: SparkSession

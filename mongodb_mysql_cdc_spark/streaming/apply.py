@@ -14,10 +14,12 @@ UPDATE / DELETE" (SURVEY.md §2.9, §3-C).
 - ``BucketedParquetSink``: the foreachBatch commit protocol shared by the
   LWW sink ``CdcParquetSink`` and the SCD2 history sink
   ``Scd2ParquetSink``. State is parquet partitioned by a hash bucket of
-  the key. A micro-batch reads only the buckets its keys touch and
-  replaces them with one dynamic partition overwrite, then records its
-  batch id in an atomically replaced commit log; replaying a committed
-  batch id is a no-op.
+  the key. The first write (the snapshot) writes its fold directly; every
+  later micro-batch reads only the buckets its keys touch. Either way one
+  dynamic partition overwrite replaces the touched buckets, then the
+  batch id goes into an atomically replaced commit log; replaying a
+  committed batch id is a no-op. The LWW fold shuffles once, on the
+  bucket, so each touched bucket is written by one task as one file.
 - ``cdc_apply_stateful_stream``: the same LWW apply with the per-key image
   in the Spark StateStore instead of a parquet table.
 """
@@ -28,7 +30,7 @@ import json
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,7 +39,7 @@ from mongodb_mysql_cdc_spark.sources.cdc import OP_DELETE
 STATE_COLS = ("key", "op", "ts", "seq", "after")
 
 
-def reconcile(envelopes: DataFrame) -> DataFrame:
+def reconcile(envelopes: DataFrame, *key_derived: str) -> DataFrame:
     """Collapse an envelope bag to one image per key: last-writer-wins by
     (ts, seq) — seq (the resume-token stand-in) breaks ts ties exactly the
     way the oplog's total order would.
@@ -45,8 +47,12 @@ def reconcile(envelopes: DataFrame) -> DataFrame:
     One ``max(struct(ts, seq, op, after))`` picks the winner: (ts, seq)
     leads the struct and seq is the globally unique oplog position, so
     within a key the comparison reaches op/after only for byte-identical
-    re-delivered rows, where either pick is the same row."""
-    m = envelopes.groupBy("key").agg(
+    re-delivered rows, where either pick is the same row.
+
+    ``key_derived`` names columns that are functions of ``key`` (the
+    sinks' ``bucket``). They lead the grouping, which leaves one group per
+    key, and come back after the state columns."""
+    m = envelopes.groupBy(*key_derived, "key").agg(
         F.max(F.struct("ts", "seq", "op", "after")).alias("_m")
     )
     return m.select(
@@ -55,6 +61,7 @@ def reconcile(envelopes: DataFrame) -> DataFrame:
         F.col("_m.ts").alias("ts"),
         F.col("_m.seq").alias("seq"),
         F.col("_m.after").alias("after"),
+        *key_derived,
     )
 
 
@@ -203,35 +210,48 @@ class BucketedParquetSink:
     Layout under ``state_dir``:
 
     - ``state/bucket=<b>/*.parquet`` with ``b = pmod(xxhash64(key),
-      n_buckets)``;
+      n_buckets)`` (``bucket()``);
     - ``_commits.json``: a JSON list of the committed batch ids.
+
+    ``fold(batch_df, old_touched)`` returns the new rows of every bucket
+    the batch touches, with their ``bucket`` column. ``old_touched`` holds
+    those buckets' current rows without it, or is None when there is no
+    state yet.
 
     ``apply_batch(batch_df, batch_id)``:
 
     1. A batch id already in the commit log is a replay: return.
-    2. Collect the distinct buckets of the batch keys (at most
+    2. Probe the state (a directory listing, no Spark job). With no state
+       yet, which is the snapshot, go to step 5 with ``fold(batch_df,
+       None)``: there is nothing to prune.
+    3. Collect the distinct buckets of the batch keys (at most
        ``n_buckets`` ints, the only driver-side collect). An empty list is
        an empty batch, committed as a no-op.
-    3. Read only those bucket directories of the old state, with the state
+    4. Read only those bucket directories of the old state, with the state
        schema given explicitly (the schema of ``fold``'s plan), so no
        schema-inference job runs.
-    4. Write ``fold(batch_df, old_touched)`` once, straight into ``state/``
-       with ``partitionOverwriteMode=dynamic``: only the bucket directories
+    5. Write the fold once, straight into ``state/`` with
+       ``partitionOverwriteMode=dynamic``: only the bucket directories
        present in the output are replaced, and the files of every other
        bucket keep their paths and mtimes.
-    5. Add the batch id to the commit log: ``_commits.json.tmp`` is
+    6. Add the batch id to the commit log: ``_commits.json.tmp`` is
        written, fsynced and ``os.replace``-d over ``_commits.json``.
 
-    Step 4 may overwrite the directories it reads because a dynamic
+    A fold that clusters its rows by ``bucket`` before its shuffle (the LWW
+    fold does) gives one task and one file per touched bucket; its final
+    stage then runs at most ``n_buckets`` tasks, whatever the shuffle
+    partition count.
+
+    Step 5 may overwrite the directories it reads because a dynamic
     overwrite writes all task output under ``state/.spark-staging-<job>/``
     and swaps bucket directories in only at job commit, after every task,
     and so every read of the old buckets, has finished. File listing skips
     ``.``-prefixed names, so the staging directory of a killed write is
     invisible to readers and to later writes.
 
-    Crash windows. A crash between steps 4 and 5 leaves the batch written
+    Crash windows. A crash between steps 5 and 6 leaves the batch written
     but not committed, and the restart replays it onto its own output; the
-    swap in step 4 is per bucket, so a crash inside it leaves some touched
+    swap in step 5 is per bucket, so a crash inside it leaves some touched
     buckets folded and others not. ``fold`` must therefore be idempotent
     per bucket: folding a batch onto state that already holds it changes
     nothing. The swap deletes a bucket directory before renaming its
@@ -243,10 +263,14 @@ class BucketedParquetSink:
     state_dir: str
     n_buckets: int = 16
 
+    def bucket(self) -> Column:
+        """The state bucket of each row's ``key``."""
+        return F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
+
     def fold(self, batch_df: DataFrame, old_touched: DataFrame | None) -> DataFrame:
-        """The new rows of the buckets ``batch_df`` touches, without the
-        bucket column. ``old_touched`` holds those buckets' current rows,
-        or is None before the first write."""
+        """The new rows of the buckets ``batch_df`` touches, with the
+        ``bucket`` column last. ``old_touched`` holds those buckets'
+        current rows without it, or is None before the first write."""
         raise NotImplementedError
 
     @property
@@ -290,21 +314,17 @@ class BucketedParquetSink:
         committed = self._load_commits()
         if batch_id in committed:
             return
-        bucket = F.pmod(F.xxhash64("key"), F.lit(self.n_buckets))
-        touched = [r[0] for r in batch_df.select(bucket).distinct().collect()]
-        if touched:
-            new = self.fold(batch_df, None)
-            old = self.state(
-                T.StructType(
-                    new.schema.fields + [T.StructField("bucket", T.LongType())]
-                )
-            )
-            if old is not None:
+        new = self.fold(batch_df, None)
+        old = self.state(new.schema)
+        if old is not None:
+            touched = [r[0] for r in batch_df.select(self.bucket()).distinct().collect()]
+            new = None  # an empty batch touches no bucket: nothing to write
+            if touched:
                 old_touched = old.filter(F.col("bucket").isin(touched)).drop("bucket")
                 new = self.fold(batch_df, old_touched)
+        if new is not None:
             (
-                new.withColumn("bucket", bucket)
-                .write.mode("overwrite")
+                new.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(self._state_path)
@@ -316,12 +336,19 @@ class BucketedParquetSink:
 class CdcParquetSink(BucketedParquetSink):
     """Last-writer-wins state table: one row per key, tombstones kept.
     ``fold`` is ``reconcile(old ∪ batch)``; reconcile is associative and
-    idempotent, so a replayed batch folds to the same rows."""
+    idempotent, so a replayed batch folds to the same rows.
+
+    The fold computes the bucket before its one shuffle, an exchange on
+    ``bucket``, and reconciles grouped by (bucket, key). The aggregate's
+    sort by (bucket, key) is then also the sort the partitioned write
+    needs, and each bucket is written by one task."""
 
     def fold(self, batch_df: DataFrame, old_touched: DataFrame | None) -> DataFrame:
-        if old_touched is None:
-            return reconcile(batch_df)
-        return merge_states(old_touched, batch_df)
+        rows = batch_df.select(*STATE_COLS)
+        if old_touched is not None:
+            rows = old_touched.select(*STATE_COLS).unionByName(rows)
+        clustered = rows.withColumn("bucket", self.bucket()).repartition("bucket")
+        return reconcile(clustered, "bucket")
 
     def current(self) -> DataFrame:
         st = self.state()
@@ -365,7 +392,7 @@ class Scd2ParquetSink(BucketedParquetSink):
     def fold(self, batch_df: DataFrame, old_touched: DataFrame | None) -> DataFrame:
         versions = scd2_versions(batch_df)
         if old_touched is None:
-            return versions
+            return versions.withColumn("bucket", self.bucket())
         first = batch_df.groupBy(F.col("key").alias("_ft_key")).agg(
             F.min(F.struct("ts", "seq")).alias("_first_delta")
         )
@@ -397,7 +424,7 @@ class Scd2ParquetSink(BucketedParquetSink):
             F.col("key").eqNullSafe(F.col("_ex_key")) & (F.col("seq") == F.col("_ex_seq")),
             "left_anti",
         )
-        return closed.unionByName(fresh)
+        return closed.unionByName(fresh).withColumn("bucket", self.bucket())
 
     def history(self) -> DataFrame:
         st = self.state()

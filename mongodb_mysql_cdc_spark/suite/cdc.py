@@ -214,20 +214,12 @@ def cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = stage_event_chunks(spark, sf_dir, n_chunks=6, dir_prefix="apply")
     sink = CdcParquetSink(spark, tempfile.mkdtemp(prefix="sparkcdc_state_"))
     stream = envelopes_from_events(read_event_stream(spark, staged))
-    # Same harness-only knob as drain_to_memory_table: each micro-batch's
-    # reconcile+state rewrite otherwise shuffles/writes 32 partitions of
-    # kilobyte data. Production sizes this to the cluster.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(sink.apply_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sparkcdc_ckpt_"))
-            .start()
-        )
-        run_to_completion(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = (
+        stream.writeStream.foreachBatch(sink.apply_batch)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="sparkcdc_ckpt_"))
+        .start()
+    )
+    run_to_completion(q)
     return sink.current()
 
 

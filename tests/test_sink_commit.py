@@ -1,13 +1,15 @@
 """The parquet sinks' commit protocol (streaming/apply.py,
 ``BucketedParquetSink``) under faults: a commit-log write that dies
 part-way, unreadable state, the crash window between the state write and
-the commit log, a killed write's leftover staging directory, and the
-per-batch job and write budget."""
+the commit log, a killed write's leftover staging directory, the
+per-batch job and write budget, and the LWW write's shape: one shuffle,
+one sort, one file per bucket."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import tempfile
 import uuid
@@ -202,3 +204,97 @@ def test_incremental_apply_job_and_write_budget(spark, sf_dir, monkeypatch):
     assert writes == [os.path.join(root, "state")]
     assert not [d for d in os.listdir(root) if d.startswith("state_tmp_")]
     assert sink._load_commits() == {0, 1}
+
+
+def _jobs_of(spark, run):
+    """The Spark job ids ``run()`` starts."""
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    run()
+    bus.waitUntilEmpty()
+    return set(tracker.getJobIdsForGroup(None)) - before
+
+
+def test_first_apply_skips_the_bucket_collect(spark, sf_dir):
+    """A sink with no state yet (the snapshot) writes its fold directly:
+    no touched-bucket collect, at most the shuffle and the write job."""
+    env = _envelopes(spark, sf_dir)
+    sink = CdcParquetSink(spark, tempfile.mkdtemp(prefix="first_apply_"))
+    jobs = _jobs_of(spark, lambda: sink.apply_batch(env, -1))
+    assert 1 <= len(jobs) <= 2, sorted(jobs)
+    want = cdc_apply_batch(env)
+    assert _rows(sink.current(), want.columns) == _rows(want, want.columns)
+
+
+@pytest.fixture
+def confs(spark):
+    """Sets session confs for one test and restores them afterwards."""
+    saved = {}
+
+    def set_conf(key, value):
+        saved.setdefault(key, spark.conf.get(key))
+        spark.conf.set(key, value)
+
+    yield set_conf
+    for key, value in saved.items():
+        spark.conf.set(key, value)
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_lww_writes_one_file_per_bucket(spark, sf_dir, confs, aqe):
+    """The LWW fold clusters by bucket before its shuffle, so each touched
+    bucket is written by one task as one file, whatever the shuffle
+    partition count and whether AQE re-plans the stage."""
+    confs("spark.sql.shuffle.partitions", "7")
+    confs("spark.sql.adaptive.enabled", aqe)
+    env = _envelopes(spark, sf_dir)
+    root = tempfile.mkdtemp(prefix=f"one_file_aqe_{aqe}_")
+    sink = CdcParquetSink(spark, root)
+    snapshot, *tail = _split(env, 3)
+    sink.apply_batch(snapshot, -1)
+    for batch_id, part in enumerate(tail):
+        sink.apply_batch(part, batch_id)
+
+    files = Counter(os.path.dirname(f) for f in _bucket_files(root))
+    assert files and set(files.values()) == {1}, files
+    want = cdc_apply_batch(env)
+    assert _rows(sink.current(), want.columns) == _rows(want, want.columns)
+
+
+def _plan_tree(description):
+    """The final physical plan tree of a formatted plan description."""
+    tree = description.split("\n\n(1) ")[0]
+    return tree.split("== Initial Plan ==")[0]
+
+
+def test_lww_write_is_one_exchange_and_one_sort(spark, sf_dir):
+    """An incremental LWW commit's write shuffles once, and the aggregate's
+    one sort by (bucket, key) also serves the partitioned write."""
+    env = _envelopes(spark, sf_dir)
+    first, second = _split(env, 2)
+    sink = CdcParquetSink(spark, tempfile.mkdtemp(prefix="write_plan_"))
+    sink.apply_batch(first, 0)
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def recent_executions():
+        # the store keeps executions ordered by id and may evict old ones
+        bus.waitUntilEmpty()
+        tail = store.executionsList(max(0, store.executionsCount() - 50), 50)
+        return [tail.apply(i) for i in range(tail.size())]
+
+    last_id = max((e.executionId() for e in recent_executions()), default=-1)
+    sink.apply_batch(second, 1)
+    writes = [
+        _plan_tree(e.physicalPlanDescription())
+        for e in recent_executions()
+        if e.executionId() > last_id
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+
+    assert len(writes) == 1, writes
+    assert len(re.findall(r"\bExchange \(\d+\)", writes[0])) == 1, writes[0]
+    assert len(re.findall(r"\bSort \(\d+\)", writes[0])) == 1, writes[0]

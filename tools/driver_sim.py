@@ -12,7 +12,8 @@ conditions:
 
 So: chdir to a scratch dir FIRST, build a bare session, then run every
 query (or the first-50 window with --window) through toPandas + the
-driver-shaped sort.
+driver-shaped sort, and print a hash of the sorted rows so two checkouts
+can be compared.
 
 Usage:  python tools/driver_sim.py [--sf /root/testdata/sf0.01] [--window] [name ...]
 """
@@ -20,6 +21,7 @@ Usage:  python tools/driver_sim.py [--sf /root/testdata/sf0.01] [--window] [name
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
 import sys
 import tempfile
@@ -55,8 +57,9 @@ def main() -> int:
             pdf = qs[n](spark, args.sf).toPandas()
             pdf = pdf[sorted(pdf.columns)]
             if len(pdf.columns) and len(pdf):
-                pdf.sort_values(by=list(pdf.columns), kind="mergesort")
-            print(f"OK {n} ({len(pdf)} rows) [{time.time()-t0:.1f}s]", flush=True)
+                pdf = pdf.sort_values(by=list(pdf.columns), kind="mergesort")
+            digest = hashlib.sha1(pdf.to_csv(index=False).encode()).hexdigest()[:16]
+            print(f"OK {n} ({len(pdf)} rows) hash={digest} [{time.time()-t0:.1f}s]", flush=True)
         except Exception as ex:
             fails.append(n)
             print(f"ERR {n}: {type(ex).__name__}: {str(ex)[:300]}", flush=True)
